@@ -148,6 +148,26 @@ object Bench {
     }
   }
 
+  /** The sweep's session on local[cpus]: [[SessionTuning]] floors, AQE,
+    * v2 bucketing, UTC, non-ANSI. [[graft.tools.Explain]] builds the same
+    * one, so the plans it prints are the plans the sweep runs.
+    */
+  def session(cpus: String): SparkSession =
+    SessionTuning.tuned(SparkSession.builder()
+      .master(s"local[$cpus]")
+      .config("spark.sql.shuffle.partitions", cpus))
+      .config("spark.sql.session.timeZone", "UTC")
+      .config("spark.sql.legacy.parquet.nanosAsLong", "true") // events.ts: ns-as-long for NANOS-era testdata (no-op on MICROS)
+      .config("spark.sql.ansi.enabled", "false") // reference semantics: lenient casts, x/0→inf
+      .config("spark.sql.adaptive.enabled", "true")
+      // storage-partitioned joins on from session start (not flipped
+      // mid-sweep by the first SPJ query): Tx scans report their bucket
+      // layout, and same-layout joins/aggs plan shuffle-free
+      .config("spark.sql.sources.v2.bucketing.enabled", "true")
+      .config("spark.sql.sources.v2.bucketing.pushPartValues.enabled", "true")
+      .config("spark.ui.enabled", "false")
+      .getOrCreate()
+
   def main(args: Array[String]): Unit = {
     val benchT0 = System.nanoTime()
     def elapsedSec: Double = (System.nanoTime() - benchT0) / 1e9
@@ -174,20 +194,7 @@ object Bench {
     val budgetSec = sys.env.getOrElse("SPARK_GRAFT_BENCH_BUDGET_SEC", "2700").toDouble
     val reserveSec = 45.0 // line build + spark.stop + sbt log-pump drain
     def remainingSec: Double = budgetSec - reserveSec - elapsedSec
-    val spark = SessionTuning.tuned(SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true") // events.ts: ns-as-long for NANOS-era testdata (no-op on MICROS)
-      .config("spark.sql.ansi.enabled", "false") // reference semantics: lenient casts, x/0→inf
-      .config("spark.sql.adaptive.enabled", "true")
-      // storage-partitioned joins on from session start (not flipped
-      // mid-sweep by the first SPJ query): Tx scans report their bucket
-      // layout, and same-layout joins/aggs plan shuffle-free
-      .config("spark.sql.sources.v2.bucketing.enabled", "true")
-      .config("spark.sql.sources.v2.bucketing.pushPartValues.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = session(cpus)
     spark.sparkContext.setLogLevel("WARN")
     // Warmup: session init paid once; every table scanned fully so no query
     // is charged for first-touch parquet/OS-cache costs.

@@ -100,6 +100,12 @@ object GraftExtensions {
   def l2sqFpNative(a: Column, b: Column): Column =
     ColumnShim.column(L2SqFp(ColumnShim.expression(a), ColumnShim.expression(b)))
 
+  /** Native nearest-candidate id: `cands` is array<struct<id, vec>>, the
+    * result the id of the minimum exact int64 squared L2 (ties → lowest id).
+    */
+  def argminL2FpNative(v: Column, cands: Column): Column =
+    ColumnShim.column(ArgminL2Fp(ColumnShim.expression(v), ColumnShim.expression(cands)))
+
   /** Native IEEE squared L2 of two array<float|double> columns. */
   def l2sqNative(a: Column, b: Column): Column =
     ColumnShim.column(L2SqDouble(ColumnShim.expression(a), ColumnShim.expression(b)))

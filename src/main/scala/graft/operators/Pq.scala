@@ -48,6 +48,26 @@ object Pq {
     aggregate(zip_with(a, b, (x, y) => (x - y) * (x - y)),
       lit(0L), (acc, x) => acc + x)
 
+  /** Id of the nearest `struct(id, vec)` in `cands` to `v` by exact int64
+    * squared L2, ties → the lowest id — native codegen'd
+    * ([[graft.expressions.ArgminL2Fp]]); [[argminL2FpHof]] is the
+    * broadcast-fold formulation it is spec-pinned against.
+    */
+  def argminL2Fp(v: Column, cands: Column): Column =
+    graft.expressions.GraftExtensions.argminL2FpNative(v, cands)
+
+  /** HOF formulation of [[argminL2Fp]] over candidates whose fields are
+    * named `id` and `vec`: fold (distance, id) structs lexicographically
+    * (interpreted; spec/parity use).
+    */
+  def argminL2FpHof(v: Column, cands: Column): Column = {
+    val scored = transform(cands, c =>
+      struct(l2sqFp(v, c.getField("vec")).as("d"), c.getField("id").as("id")))
+    aggregate(scored,
+      struct(lit(Long.MaxValue).as("d"), lit(Long.MaxValue).as("id")),
+      (acc, x) => when(x < acc, x).otherwise(acc)).getField("id")
+  }
+
   /** Fixed-point sub-vector table: one row per (id, subspace) with the
     * subspace's d/m coordinates as int64 `v`. `dim` must be divisible by
     * `m`. The explode multiplies row count by m but each row shrinks by
@@ -114,11 +134,12 @@ object Pq {
     lloydRounds(svPlan,
       svPlan.filter(col(idCol) < k)
         .select(col("sub"), col(idCol).cast("long").as("cid"), col("v").as("c")),
-      iters)
+      iters).orderBy("sub", "cid", "dim")
   }
 
   /** The shared Lloyd loop: `seeds` is the initial (sub, cid, c) codebook
-    * table; everything else is [[trainCodebooksSv]]'s contract.
+    * table; everything else is [[trainCodebooksSv]]'s contract, except
+    * that the long-form rows come back unordered.
     */
   private def lloydRounds(
       svPlan: DataFrame,
@@ -147,17 +168,18 @@ object Pq {
         transform(array_sort(collect_list(struct(col("dim"), col("c_fp")))),
           s => s.getField("c_fp")).as("c"))
     }
-    val result = out.orderBy("sub", "cid", "dim")
+    // `out` is local-backed in the truncated path, so the persisted
+    // sub-vectors can be released now
     if (truncate) sv.unpersist(blocking = false)
-    result
+    out
   }
 
   /** Nearest-codeword assignment for a sub-vector table against list-form
     * codebooks (sub, cid, c) — the broadcast-fold shape: the whole m·k
-    * codebook collapses to one broadcast row; each row filters to its own
-    * subspace's codewords and argmin-folds (d, cid) lexicographically
-    * (min distance, ties → min codeword id). Zero shuffle of the data
-    * side. Output: input columns + `code`.
+    * codebook collapses to one broadcast row per subspace; each row takes
+    * the [[argminL2Fp]] of its own subspace's codewords (min distance,
+    * ties → min codeword id). Zero shuffle of the data side. Output: input
+    * columns + `code`.
     */
   private def assignCodes(sv: DataFrame, cents: DataFrame): DataFrame = {
     // One broadcast row PER SUBSPACE (hash-joined on `sub`, codegen'd)
@@ -165,8 +187,7 @@ object Pq {
     // `filter(__cb, sub match)` scanned all m·k entries for every
     // sub-vector before the k-entry argmin; the join hands each row only
     // its own subspace's k codewords. Still zero shuffle of the data side.
-    val bySub = cents.groupBy("sub").agg(
-      sort_array(collect_list(struct(col("cid"), col("c")))).as("__cw"))
+    val bySub = codewordsBySub(cents)
     // LEFT join + in-plan raise_error, not an inner join: an inner join
     // would silently DROP every sub-vector whose subspace has no codeword
     // (empty-seed misuse would yield an empty "encoding" instead of an
@@ -174,22 +195,29 @@ object Pq {
     val cw = when(col("__cw").isNull, raise_error(concat(
       lit("graft.Pq.assignCodes: codebook has no codewords for subspace "),
       col("sub").cast("string")))).otherwise(col("__cw"))
-    val scored = transform(cw, c0 =>
-      struct(l2sqFp(col("v"), c0.getField("c")).as("d"), c0.getField("cid").as("cid")))
-    val best = aggregate(scored,
-      struct(lit(Long.MaxValue).as("d"), lit(Long.MaxValue).as("cid")),
-      (acc, x) => when(x < acc, x).otherwise(acc)).getField("cid")
     sv.join(broadcast(bySub), Seq("sub"), "left")
-      .withColumn("code", best)
+      .withColumn("code", argminL2Fp(col("v"), cw))
       .drop("__cw")
   }
 
+  /** One row per subspace: (sub, __cw = its codewords as a sorted
+    * array<struct<cid, c>>) from list-form codebooks — the broadcast row
+    * both [[assignCodes]] and the per-probe lookup tables read, so a plan
+    * that does both over one in-plan codebook broadcasts it once.
+    */
+  private def codewordsBySub(cents: DataFrame): DataFrame =
+    cents.groupBy("sub").agg(
+      sort_array(collect_list(struct(col("cid"), col("c")))).as("__cw"))
+
   /** Collect the codebook (m·k·(d/m) rows — broadcast-small by contract,
     * same as [[Similarity.kmeansFp]]'s truncate path) and rebuild it as a
-    * local-backed frame, so queries that consume it twice (encode + ADC
-    * lookup table) pay the training pass over the corpus ONCE instead of
-    * inlining it into both consumers. Values are exact int64 / floor-
-    * division results, so the rebuild is bit-identical to the lazy plan.
+    * local-backed frame, so a query that consumes ONE codebook set twice
+    * (encode + ADC lookup table) pays the training pass over the corpus
+    * once instead of inlining it into both consumers. Values are exact
+    * int64 / floor-division results, so the rebuild is bit-identical to the
+    * lazy plan. The code-budget dials (q145/q152) do not localize: their
+    * training stays in the plan ([[trainCodebooksMulti]]) and the two
+    * consumers share its exchanges.
     */
   def localized(codebooks: DataFrame): DataFrame = {
     import scala.jdk.CollectionConverters._
@@ -197,20 +225,63 @@ object Pq {
       codebooks.collect().toSeq.asJava, codebooks.schema)
   }
 
-  /** Train SEVERAL (m, k) PQ configurations in ONE fused Lloyd pass and
-    * ONE driver collect — the code-budget dial (q145/q152) trains 2–4
-    * codebook sets over the same corpus, and run separately each config
-    * pays its own corpus scan plus an eager collect round-trip. Fusing
-    * tags each config's sub-vector table with a disjoint `sub` range
-    * (config i occupies [i·64, i·64+m)), unions them, and runs the
-    * standard loop: the broadcast-fold assignment matches each row only
-    * against its own (config, subspace) codewords because the range
-    * encoding makes `sub` globally unique, so results are bit-identical
-    * to per-config training — same seeds (first k ids of that config),
-    * same argmin, same floor-mean updates. Returns one LOCALIZED
-    * codebook frame per config, `sub` shifted back to [0, m).
-    *
-    * Requires m <= 64 per config and iters <= 2 (the lazy-plan regime).
+  /** `sub` stride of a multi-budget sub-vector table: budget i's subspaces
+    * occupy [i·CfgStride, i·CfgStride + m_i), so `sub` is globally unique
+    * and every per-subspace operator (training, assignment, lookup tables)
+    * keeps budgets apart without a budget column.
+    */
+  val CfgStride = 64
+
+  /** The budget index of a multi-budget `sub`. */
+  private def cfgOf(sub: Column): Column = (sub / CfgStride).cast("int")
+
+  /** Every budget's sub-vectors from ONE projection of a fixed-point
+    * (id, v) table: budget i splits `v` into `ms(i)` subspaces, tagged
+    * `sub = i·CfgStride + j` ([[subVectorsFp]]'s rows, shifted). One
+    * explode of a literal (sub, start, len) list — a map-side projection,
+    * however many budgets. Output: (id, sub, v).
+    */
+  def subVectorsFpMulti(
+      fp: DataFrame,
+      idCol: String,
+      ms: Seq[Int],
+      dimTotal: Int): DataFrame = {
+    require(ms.nonEmpty && ms.forall(m => m >= 1 && m <= CfgStride && dimTotal % m == 0),
+      s"every budget needs 1 <= m <= $CfgStride dividing $dimTotal: $ms")
+    val parts = for ((m, i) <- ms.zipWithIndex; j <- 0 until m) yield
+      struct(lit(i * CfgStride + j).as("sub"),
+        lit(j * (dimTotal / m) + 1).as("start"), lit(dimTotal / m).as("len"))
+    fp.select(col(idCol), col("v").as("__v"), explode(array(parts: _*)).as("__p"))
+      .select(col(idCol), col("__p.sub").as("sub"),
+        slice(col("__v"), col("__p.start"), col("__p.len")).as("v"))
+  }
+
+  /** Train every budget of a [[subVectorsFpMulti]] table in ONE Lloyd pass,
+    * in the plan: budget i's seeds are its first `ks(i)` ids, and the
+    * globally unique `sub` keeps each row's argmin and each update inside
+    * its own (budget, subspace) — bit-identical to per-budget
+    * [[trainCodebooksSv]]. Output: long-form codebooks (sub, cid, dim,
+    * c_fp, n) with the global `sub`, unordered (consumers group it).
+    */
+  def trainCodebooksMulti(
+      sv: DataFrame,
+      idCol: String,
+      ks: Seq[Int],
+      iters: Int): DataFrame = {
+    require(ks.nonEmpty && ks.forall(_ >= 1) && iters >= 1)
+    val kOf = element_at(typedLit(ks), cfgOf(col("sub")) + 1)
+    lloydRounds(sv,
+      sv.filter(col(idCol) < kOf)
+        .select(col("sub"), col(idCol).cast("long").as("cid"), col("v").as("c")),
+      iters)
+  }
+
+  /** Per-budget, localized view of [[trainCodebooksMulti]] for callers that
+    * consume one (m, k) codebook set at a time: ONE fused training pass,
+    * ONE driver collect, then each budget's rows with `sub` shifted back to
+    * [0, m). The code-budget dials do not use it — they encode and score
+    * every budget in one plan over the global `sub`
+    * ([[adcTopKPerProbeMulti]]).
     */
   def trainCodebooksMultiLocalized(
       df: DataFrame,
@@ -220,21 +291,13 @@ object Pq {
       dimTotal: Int,
       iters: Int,
       scale: Double = 1e7): Seq[DataFrame] = {
-    require(cfgs.nonEmpty && cfgs.forall { case (m, k) => m >= 1 && m <= 64 && k >= 1 })
-    require(iters >= 1 && iters <= 2, "fused training stays in the lazy-plan regime")
-    val svs = cfgs.zipWithIndex.map { case ((m, _), i) =>
-      subVectorsFp(df, idCol, embCol, m, dimTotal, scale)
-        .withColumn("sub", (col("sub") + lit(i * 64)).cast("int"))
-    }
-    val svAll = svs.reduce(_ unionByName _)
-    val seeds = cfgs.zipWithIndex.map { case ((_, k), i) =>
-      svs(i).filter(col(idCol) < k)
-        .select(col("sub"), col(idCol).cast("long").as("cid"), col("v").as("c"))
-    }.reduce(_ unionByName _)
-    val local = localized(lloydRounds(svAll, seeds, iters))
-    cfgs.zipWithIndex.map { case (_, i) =>
-      local.filter(col("sub") >= i * 64 && col("sub") < (i + 1) * 64)
-        .withColumn("sub", (col("sub") - lit(i * 64)).cast("int"))
+    val fp = df.select(col(idCol),
+      transform(col(embCol), x => floor(x.cast("double") * scale).cast("long")).as("v"))
+    val local = localized(trainCodebooksMulti(
+      subVectorsFpMulti(fp, idCol, cfgs.map(_._1), dimTotal), idCol, cfgs.map(_._2), iters))
+    cfgs.indices.map { i =>
+      local.filter(cfgOf(col("sub")) === i)
+        .withColumn("sub", (col("sub") - lit(i * CfgStride)).cast("int"))
     }
   }
 
@@ -288,13 +351,8 @@ object Pq {
   def coarseAssignFp(fp: DataFrame, idCol: String, cents: DataFrame): DataFrame = {
     val centsArr = cents.agg(
       sort_array(collect_list(struct(col("ccid"), col("c")))).as("__cc"))
-    val scored = transform(col("__cc"), ct =>
-      struct(l2sqFp(col("v"), ct.getField("c")).as("d"), ct.getField("ccid").as("ccid")))
-    val best = aggregate(scored,
-      struct(lit(Long.MaxValue).as("d"), lit(Long.MaxValue).as("ccid")),
-      (acc, x) => when(x < acc, x).otherwise(acc)).getField("ccid")
     fp.crossJoin(broadcast(centsArr))
-      .withColumn("ccid", best)
+      .withColumn("ccid", argminL2Fp(col("v"), col("__cc")))
       .drop("__cc")
   }
 
@@ -363,24 +421,61 @@ object Pq {
       idCol: String,
       codebooks: DataFrame, // long form
       probesSv: DataFrame, // (probe_id, sub, v)
-      kTop: Int): DataFrame = {
-    val lut = codebooksList(codebooks)
-      .join(probesSv.select(col("probe_id"),
-        col("sub").as("__ps"), col("v").as("__pv")),
-        col("sub") === col("__ps"))
-      .select(col("probe_id"), col("sub"), col("cid"),
-        l2sqFp(col("c"), col("__pv")).as("d"))
+      kTop: Int): DataFrame =
+    Analytics.topKPerGroupNative(adcSumsPerProbe(codes, idCol, codebooks, probesSv),
+      Seq("probe_id"), Seq(("adc_d", false), (idCol, false)), kTop)
+
+  /** [[adcTopKPerProbe]] for every budget of a multi-budget table at once:
+    * `codes` from [[encodeSv]] over [[subVectorsFpMulti]], `codebooks` from
+    * [[trainCodebooksMulti]], `probesSv` the probes' rows of the same
+    * table. One lookup table, one join, one sum grouped by
+    * (probe_id, cfg, id), one top-k keyed on (cfg, probe_id) — per budget
+    * the rows of the single-budget operator. Output: (probe_id, cfg, id,
+    * adc_d), `cfg` the budget index.
+    */
+  def adcTopKPerProbeMulti(
+      codes: DataFrame, // (id, sub, code), global sub
+      idCol: String,
+      codebooks: DataFrame, // long form, global sub
+      probesSv: DataFrame, // (probe_id, sub, v), global sub
+      kTop: Int): DataFrame =
+    Analytics.topKPerGroupNative(
+      adcSumsPerProbe(codes, idCol, codebooks, probesSv, cfgOf(codes("sub")).as("cfg")),
+      Seq("cfg", "probe_id"), Seq(("adc_d", false), (idCol, false)), kTop)
+
+  /** Per-probe ADC distance of every non-probe vector: (probe_id, keys...,
+    * id, adc_d).
+    */
+  private def adcSumsPerProbe(
+      codes: DataFrame,
+      idCol: String,
+      codebooks: DataFrame,
+      probesSv: DataFrame,
+      keys: Column*): DataFrame = {
+    // The table reads the same per-subspace broadcast as the encode
+    // ([[codewordsBySub]], LEFT-joined like [[assignCodes]]), so over an
+    // in-plan codebook the two consumers share one broadcast and one
+    // training pass. An inner join or a plain explode would let the
+    // optimizer push NOT NULL filters into the codebook's lineage and make
+    // the two plans differ; a subspace without codewords gives a NULL
+    // `__lc`, which the equi-join below drops.
+    val lut = probesSv.select(col("probe_id"), col("sub"), col("v").as("__pv"))
+      .join(broadcast(codewordsBySub(codebooksList(codebooks))), Seq("sub"), "left")
+      .select(col("probe_id"), col("sub").as("__ls"), col("__pv"),
+        explode_outer(col("__cw")).as("__w"))
+      .select(col("probe_id"), col("__ls"), col("__w.cid").as("__lc"),
+        l2sqFp(col("__w.c"), col("__pv")).as("d"))
     // (sub, code)=(sub, cid) must be JOIN keys, not a post-join filter: with
     // them in the hash key the broadcast join emits codes·probes rows; keyed
     // on `sub` alone it first fans every code row out to all probes·k LUT
-    // entries of its subspace (~30× more intermediate rows at k=32).
-    val summed = codes.join(broadcast(lut),
-        codes("sub") === lut("sub") && codes("code") === lut("cid"))
+    // entries of its subspace (~30× more intermediate rows at k=32). The
+    // lookup side is renamed: codes and codebooks may share lineage (an
+    // in-plan trained codebook), and same-named sides would self-resolve.
+    codes.join(broadcast(lut),
+        codes("sub") === col("__ls") && codes("code") === col("__lc"))
       .filter(col(idCol) =!= col("probe_id"))
-      .groupBy(col("probe_id"), col(idCol))
+      .groupBy(col("probe_id") +: keys :+ col(idCol): _*)
       .agg(sum(col("d")).as("adc_d"))
-    Analytics.topKPerGroupNative(summed,
-      Seq("probe_id"), Seq(("adc_d", false), (idCol, false)), kTop)
   }
 
   /** Asymmetric Distance Computation top-k: exact int64 distance from the

@@ -179,16 +179,8 @@ object Similarity {
     for (_ <- 1 to iters) {
       val centsArr = cents.agg(
         sort_array(collect_list(struct(col("cid"), col("__c")))).as("__cents"))
-      val scored = transform(col("__cents"), ct =>
-        struct(
-          graft.expressions.GraftExtensions
-            .l2sqFpNative(col("__v"), ct.getField("__c")).as("d"),
-          ct.getField("cid").as("cid")))
-      val best = aggregate(scored,
-        struct(lit(Long.MaxValue).as("d"), lit(Long.MaxValue).as("cid")),
-        (acc, x) => when(x < acc, x).otherwise(acc)).getField("cid")
       val assigned = fp.crossJoin(broadcast(centsArr))
-        .select(col(idCol), col("__v"), best.as("cid"))
+        .select(col(idCol), col("__v"), Pq.argminL2Fp(col("__v"), col("__cents")).as("cid"))
       val sums = assigned
         .select(col("cid"), posexplode(col("__v")).as(Seq("__p", "__x")))
         .groupBy(col("cid"), (col("__p") + 1).as("dim"))
@@ -283,16 +275,9 @@ object Similarity {
     def assignTo(cents: DataFrame): DataFrame = {
       val centsArr = cents.agg(
         sort_array(collect_list(struct(col("sid"), col("__c")))).as("__cents"))
-      val scored = transform(col("__cents"), ct =>
-        struct(
-          graft.expressions.GraftExtensions
-            .l2sqFpNative(col("__v"), ct.getField("__c")).as("d"),
-          ct.getField("sid").as("sid")))
-      val best = aggregate(scored,
-        struct(lit(Long.MaxValue).as("d"), lit(Long.MaxValue).as("sid")),
-        (acc, x) => when(x < acc, x).otherwise(acc)).getField("sid")
       members.crossJoin(broadcast(centsArr))
-        .select(col("vec_id"), col("embedding"), col("__v"), best.as("sid"))
+        .select(col("vec_id"), col("embedding"), col("__v"),
+          Pq.argminL2Fp(col("__v"), col("__cents")).as("sid"))
     }
     // one Lloyd round: assign to seeds, recompute means (floor(sum/n) per
     // dim — exact int64), then the FINAL assignment against those means.

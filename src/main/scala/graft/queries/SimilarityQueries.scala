@@ -1,6 +1,6 @@
 package graft.queries
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.functions.Exact
 import graft.operators.{Pq, Similarity}
@@ -53,6 +53,63 @@ object SimilarityQueries {
         UNION ALL
         SELECT vec_id + 10000, list_transform(embedding, x -> x * CAST(2.0 AS FLOAT))
         FROM embeddings WHERE vec_id % 5 = 0)"""
+
+  /** A PQ code-budget dial (q145/q152) as ONE plan over the q114 probe set
+    * (vec_id % 29 = 0, 18 probes — single-probe recall is noise). Every
+    * budget (label, m, k) is tagged by its index `cfg`: one projection
+    * explodes all budgets' sub-vectors, one in-plan Lloyd round trains all
+    * codebooks, one assignment encodes the corpus, one lookup table and
+    * one top-k keyed on (cfg, probe_id) give each budget's per-probe ADC
+    * top-`shortlist`. `rank` turns that (cfg, probe_id, vec_id) shortlist
+    * into the final per-budget top-10, given the fixed-point table
+    * (vec_id, v) and the probes (probe_id, pv). The exact top-10 is built
+    * once; the counts (cfg, n_exact, `nName`, n_hits) come out of one
+    * single-partition aggregation over (budget, probe, vec) rows tagged
+    * exact and/or found, with one row per budget from the literal budget
+    * list so every budget keeps its row.
+    */
+  private def pqDial(
+      s: SparkSession,
+      dir: String,
+      budgets: Seq[(String, Int, Int)],
+      nName: String,
+      shortlist: Int)(
+      rank: (DataFrame, DataFrame, DataFrame) => DataFrame): DataFrame = {
+    val fpv = transform(col("embedding"), x => floor(x.cast("double") * 1e7).cast("long"))
+    val fp = Tables.embeddings(s, dir).select(col("vec_id"), fpv.as("v"))
+    val probes = fp.filter(col("vec_id") % 29 === 0)
+      .select(col("vec_id").as("probe_id"), col("v").as("pv"))
+    val ext = graft.operators.Analytics.topKPerGroupNative(
+      fp.crossJoin(broadcast(probes)).filter(col("vec_id") =!= col("probe_id"))
+        .withColumn("d", Pq.l2sqFp(col("v"), col("pv")))
+        .select("probe_id", "vec_id", "d"),
+      Seq("probe_id"), Seq(("d", false), ("vec_id", false)), 10)
+      .select("probe_id", "vec_id")
+    val sv = Pq.subVectorsFpMulti(fp, "vec_id", budgets.map(_._2), Dim)
+    val cb = Pq.trainCodebooksMulti(sv, "vec_id", budgets.map(_._3), iters = 1)
+    val top = Pq.adcTopKPerProbeMulti(Pq.encodeSv(sv, cb), "vec_id", cb,
+      sv.filter(col("vec_id") % 29 === 0).withColumnRenamed("vec_id", "probe_id"), shortlist)
+      .select("cfg", "probe_id", "vec_id")
+    // per (budget, probe, vec): exact (__e) and/or found (__f), plus one
+    // empty row per budget so every budget keeps its row. A few rows per
+    // probe, so both aggregates and the sort run in one partition.
+    val cfgIds = explode(array(budgets.indices.map(lit(_)): _*)).as("cfg_id")
+    // the budget's label, non-null as the output schema has always had it
+    val label = budgets.indices.init.foldRight(lit(budgets.last._1)) { (i, rest) =>
+      when(col("cfg_id") === i, budgets(i)._1).otherwise(rest) }
+    def rows(df: DataFrame, cfg: Column, e: Int, f: Int) =
+      df.select(cfg, col("probe_id"), col("vec_id"), lit(e).as("__e"), lit(f).as("__f"))
+    rows(s.range(1).select(lit(null).cast("long").as("probe_id"),
+        lit(null).cast("long").as("vec_id")), cfgIds, 0, 0)
+      .unionByName(rows(ext, cfgIds, 1, 0))
+      .unionByName(rows(rank(top, fp, probes), col("cfg").as("cfg_id"), 0, 1))
+      .repartition(1)
+      .groupBy("cfg_id", "probe_id", "vec_id").agg(max("__e").as("__e"), max("__f").as("__f"))
+      .groupBy("cfg_id").agg(count_if(col("__e") === 1).as("n_exact"),
+        count_if(col("__f") === 1).as(nName), count_if(col("__e") + col("__f") === 2).as("n_hits"))
+      .select(label.as("cfg"), col("n_exact"), col(nName), col("n_hits"))
+      .orderBy("cfg")
+  }
 
   val queries: Map[String, Q] = Map(
     // Brute-force exact cosine top-10: full scan + broadcast probe +
@@ -711,44 +768,13 @@ object SimilarityQueries {
     // probes — single-probe recall is noise): recall@10 at 6 / 12 / 32 /
     // 80-bit codes side by side. The code-budget/recall tradeoff a
     // production index tunes, monotone in the budget and itself under the
-    // hash gate. Multi-probe ADC = probes·k·m-row broadcast LUT + the
-    // bounded-heap TopKPerGroup per probe.
-    "q145_pq_recall_dial" -> ((s, dir) => {
-      val e = Tables.embeddings(s, dir)
-      val fpv = transform(col("embedding"), x => floor(x.cast("double") * 1e7).cast("long"))
-      val fp = e.select(col("vec_id"), fpv.as("v"))
-      val probes = fp.filter(col("vec_id") % 29 === 0)
-        .select(col("vec_id").as("probe_id"), col("v").as("pv"))
-      val ext = graft.operators.Analytics.topKPerGroupNative(
-        fp.crossJoin(broadcast(probes)).filter(col("vec_id") =!= col("probe_id"))
-          .withColumn("d", Pq.l2sqFp(col("v"), col("pv")))
-          .select("probe_id", "vec_id", "d"),
-        Seq("probe_id"), Seq(("d", false), ("vec_id", false)), 10)
-        .select("probe_id", "vec_id")
-      // All four codebook sets train in ONE fused Lloyd pass + ONE collect
-      // (disjoint sub-ranges) instead of four sequential eager round-trips.
-      val cfgList = Seq((2, 8), (4, 8), (8, 16), (16, 32))
-      val cbs = Pq.trainCodebooksMultiLocalized(
-        e, "vec_id", "embedding", cfgList, Dim, iters = 1)
-      def audit(m: Int, k: Int, cb: DataFrame, cfg: String): DataFrame = {
-        val codes = Pq.encode(e, "vec_id", "embedding", cb, m, Dim)
-        val probesSv = Pq.subVectorsFp(
-          e.filter(col("vec_id") % 29 === 0).select(col("vec_id").as("probe_id"), col("embedding")),
-          "probe_id", "embedding", m, Dim)
-        val adct = Pq.adcTopKPerProbe(codes, "vec_id", cb, probesSv, 10)
-          .select("probe_id", "vec_id")
-        val hits = ext.join(adct, Seq("probe_id", "vec_id"))
-        ext.agg(count(lit(1)).as("n_exact"))
-          .crossJoin(adct.agg(count(lit(1)).as("n_adc")))
-          .crossJoin(hits.agg(count(lit(1)).as("n_hits")))
-          .select(lit(cfg).as("cfg"), col("n_exact"), col("n_adc"), col("n_hits"))
-      }
-      audit(2, 8, cbs(0), "a_m2_k8_6bit")
-        .unionByName(audit(4, 8, cbs(1), "b_m4_k8_12bit"))
-        .unionByName(audit(8, 16, cbs(2), "c_m8_k16_32bit"))
-        .unionByName(audit(16, 32, cbs(3), "d_m16_k32_80bit"))
-        .orderBy("cfg")
-    }),
+    // hash gate. All four budgets are one plan ([[pqDial]]): one
+    // probes·Σk·m-row broadcast LUT and one bounded-heap TopKPerGroup
+    // keyed on (cfg, probe_id).
+    "q145_pq_recall_dial" -> ((s, dir) =>
+      pqDial(s, dir, Seq(("a_m2_k8_6bit", 2, 8), ("b_m4_k8_12bit", 4, 8),
+        ("c_m8_k16_32bit", 8, 16), ("d_m16_k32_80bit", 16, 32)), "n_adc", 10)(
+        (adct, _, _) => adct)),
     // The re-rank dial — q145's code-budget sweep with q147's exact
     // re-rank bolted on at the cheapest and richest budgets: per probe,
     // the ADC top-32 shortlist is re-ranked by exact int64 distance and
@@ -756,47 +782,19 @@ object SimilarityQueries {
     // re-ranking recovers the ADC ordering error for the price of R exact
     // distances per query — recall@10 becomes the shortlist's recall@32,
     // so even the 6-bit code budget climbs. Shortlists are probes×32 rows
-    // (broadcast); the exact pass joins only those rows against the
-    // full-precision table; per-probe top-k is the bounded-heap
-    // TopKPerGroup.
-    "q152_rerank_dial" -> ((s, dir) => {
-      val e = Tables.embeddings(s, dir)
-      val fpv = transform(col("embedding"), x => floor(x.cast("double") * 1e7).cast("long"))
-      val fp = e.select(col("vec_id"), fpv.as("v"))
-      val probes = fp.filter(col("vec_id") % 29 === 0)
-        .select(col("vec_id").as("probe_id"), col("v").as("pv"))
-      val ext = graft.operators.Analytics.topKPerGroupNative(
-        fp.crossJoin(broadcast(probes)).filter(col("vec_id") =!= col("probe_id"))
-          .withColumn("d", Pq.l2sqFp(col("v"), col("pv")))
-          .select("probe_id", "vec_id", "d"),
-        Seq("probe_id"), Seq(("d", false), ("vec_id", false)), 10)
-        .select("probe_id", "vec_id")
-      // Both code budgets train in one fused pass (q145's discipline).
-      val cbs = Pq.trainCodebooksMultiLocalized(
-        e, "vec_id", "embedding", Seq((2, 8), (16, 32)), Dim, iters = 1)
-      def audit(m: Int, k: Int, cb: DataFrame, cfg: String): DataFrame = {
-        val codes = Pq.encode(e, "vec_id", "embedding", cb, m, Dim)
-        val probesSv = Pq.subVectorsFp(
-          e.filter(col("vec_id") % 29 === 0).select(col("vec_id").as("probe_id"), col("embedding")),
-          "probe_id", "embedding", m, Dim)
-        val sl = Pq.adcTopKPerProbe(codes, "vec_id", cb, probesSv, 32)
-          .select("probe_id", "vec_id")
-        val rrt = graft.operators.Analytics.topKPerGroupNative(
+    // per budget; the exact pass joins only those rows against the
+    // full-precision table; both budgets' re-ranks are one bounded-heap
+    // TopKPerGroup keyed on (cfg, probe_id).
+    "q152_rerank_dial" -> ((s, dir) =>
+      pqDial(s, dir, Seq(("a_m2_k8_6bit", 2, 8), ("d_m16_k32_80bit", 16, 32)),
+        "n_rerank", 32) { (sl, fp, probes) =>
+        graft.operators.Analytics.topKPerGroupNative(
           sl.join(fp, "vec_id").join(broadcast(probes), "probe_id")
             .withColumn("d", Pq.l2sqFp(col("v"), col("pv")))
-            .select("probe_id", "vec_id", "d"),
-          Seq("probe_id"), Seq(("d", false), ("vec_id", false)), 10)
-          .select("probe_id", "vec_id")
-        val hits = ext.join(rrt, Seq("probe_id", "vec_id"))
-        ext.agg(count(lit(1)).as("n_exact"))
-          .crossJoin(rrt.agg(count(lit(1)).as("n_rerank")))
-          .crossJoin(hits.agg(count(lit(1)).as("n_hits")))
-          .select(lit(cfg).as("cfg"), col("n_exact"), col("n_rerank"), col("n_hits"))
-      }
-      audit(2, 8, cbs(0), "a_m2_k8_6bit")
-        .unionByName(audit(16, 32, cbs(1), "d_m16_k32_80bit"))
-        .orderBy("cfg")
-    }),
+            .select("cfg", "probe_id", "vec_id", "d"),
+          Seq("cfg", "probe_id"), Seq(("d", false), ("vec_id", false)), 10)
+          .select("cfg", "probe_id", "vec_id")
+      }),
     // Maximal Marginal Relevance selection (Carbonell & Goldstein, SIGIR
     // 1998) — the serving-side diverse-context picker: from the probe's
     // top-32 relevance pool, greedily take 8 items maximizing

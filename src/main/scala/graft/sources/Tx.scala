@@ -2346,13 +2346,14 @@ object Tx {
         .agg(probeAggs.head, probeAggs.tail: _*)
         .collect()
       val stagedEmpty = bucketProbe.isEmpty
-      val batchBuckets = bucketProbe.map(_.getInt(0)).toSet
+      val batchBuckets = bucketProbe.map(_.getAs[Int]("__b")).toSet
       // the caller's gate reports FIRST (it did when it was a separate
       // pre-commit scan — commitReplaceWhere's condition check preceded
-      // every null-key path), then the null-key gate
+      // every null-key path), then the null-key gate. Counts are read by
+      // field name: a further probe column must not shift them.
       gate.foreach { case (_, msg) =>
-        require(bucketProbe.map(_.getLong(3)).sum == 0L, msg) }
-      require(bucketProbe.map(_.getLong(2)).sum == 0L,
+        require(bucketProbe.map(_.getAs[Long]("__ng")).sum == 0L, msg) }
+      require(bucketProbe.map(_.getAs[Long]("__nn")).sum == 0L,
         s"$opName: NULL values in merge key(s) ${keys.mkString(", ")} — " +
           "a NULL key never matches and would silently duplicate")
       // delta DELETE keys touch buckets too — their bucket set is just
@@ -2363,10 +2364,10 @@ object Tx {
         _.groupBy(bucketOf(bk, nBuckets).as("__b"))
           .agg(count_if(keys.map(col(_).isNull).reduce(_ or _)).as("__nn"))
           .collect())
-      delProbe.foreach(tb => require(tb.map(_.getLong(1)).sum == 0L,
+      delProbe.foreach(tb => require(tb.map(_.getAs[Long]("__nn")).sum == 0L,
         s"$opName: NULL values in delete keys"))
       val delBuckets =
-        delProbe.map(_.map(_.getInt(0)).toSet).getOrElse(Set.empty[Int])
+        delProbe.map(_.map(_.getAs[Int]("__b")).toSet).getOrElse(Set.empty[Int])
       // a surviving plan from a lost race: (commitDir, touched buckets,
       // buckets the rewrite actually produced, the base dirs it saw,
       // the written buckets' zone-map stats, their data byte sizes)

@@ -29,4 +29,11 @@ object DatasetShim {
         org.apache.spark.sql.catalyst.expressions.Expression): Unit =
     spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
       .sessionState.functionRegistry.registerFunction(ident, info, builder)
+
+  /** Wait until the listener bus has delivered every event posted so far
+    * (its drain is `private[spark]`), e.g. a QueryExecutionListener's
+    * onSuccess for an action that just returned.
+    */
+  def drainListeners(spark: SparkSession): Unit =
+    spark.sparkContext.listenerBus.waitUntilEmpty()
 }

@@ -97,6 +97,64 @@ class ExpressionsSpec extends AnyFunSuite with SparkFixture {
     assert(outD.map(_._2).toSeq == Seq(None, None, Some(8.0)))
   }
 
+  private type Cand = (java.lang.Long, Seq[java.lang.Long])
+
+  test("native argminL2Fp equals the HOF fold: random, exact ties, degenerate inputs") {
+    def vec(xs: Long*): Seq[java.lang.Long] = xs.map(java.lang.Long.valueOf)
+    val rnd = new scala.util.Random(11)
+    def rv(n: Int): Seq[java.lang.Long] = vec(Seq.fill(n)(rnd.nextInt(7) - 3L): _*)
+    // random: small coordinates so equal distances (ties) occur often
+    val random = (0 until 60).map { r =>
+      val ids = rnd.shuffle((0L until 12L).toList).take(1 + rnd.nextInt(8))
+      (r.toLong, rv(4), ids.map(i => (java.lang.Long.valueOf(i), rv(4)): Cand): Seq[Cand])
+    }
+    val dup = vec(5L, -2L, 1L)
+    val edge: Seq[(Long, Seq[java.lang.Long], Seq[Cand])] = Seq(
+      // exact ties in unsorted order → lowest id
+      (100L, vec(1L, 2L, 3L), Seq((9L, dup), (4L, dup), (7L, dup))),
+      (101L, vec(0L, 0L, 0L), Seq((3L, vec(1L, 0L, 0L)), (2L, vec(0L, -1L, 0L)))),
+      (102L, null, Seq((5L, dup), (3L, dup))),                          // null vector
+      (103L, vec(1L, 2L, 3L), Seq((5L, dup), (8L, vec(1L, 2L)))),        // length mismatch
+      (104L, vec(1L, 2L, 3L), Seq((5L, dup), (6L, Seq[java.lang.Long](1L, null, 3L)))),  // null element
+      (105L, Seq[java.lang.Long](1L, null, 3L), Seq((5L, dup), (2L, dup))), // null in v
+      (106L, vec(1L, 2L, 3L), Seq((5L, dup), null, (2L, dup))),          // null entry
+      (107L, vec(1L, 2L, 3L), Seq((null, dup), (2L, dup))),              // null id
+      (108L, vec(1L, 2L, 3L), Seq.empty),                                // empty array
+      (109L, vec(1L, 2L, 3L), null),                                     // null array
+      (110L, vec(Long.MaxValue, 0L), Seq((1L, vec(-1L, 0L)), (2L, vec(0L, 0L))))) // wrap
+    val df = (random ++ edge).toDF("rid", "v", "cands").withColumn("cands",
+      col("cands").cast("array<struct<id: bigint, vec: array<bigint>>>"))
+    def both(d: org.apache.spark.sql.DataFrame) = d.select(col("rid"),
+      graft.operators.Pq.argminL2Fp(col("v"), col("cands")).as("native"),
+      graft.operators.Pq.argminL2FpHof(col("v"), col("cands")).as("hof"))
+      .as[(Long, Option[Long], Option[Long])].collect().sortBy(_._1).toSeq
+    // a local relation evaluates interpreted at optimization time; behind an
+    // exchange the projection is whole-stage codegen'd (fallback off, so a
+    // codegen compile error fails the test instead of hiding)
+    spark.conf.set("spark.sql.codegen.fallback", "false")
+    val (interp, codegen) =
+      try (both(df), both(df.repartition(3)))
+      finally spark.conf.unset("spark.sql.codegen.fallback")
+    assert(interp.length == random.length + edge.length)
+    Seq(interp, codegen).foreach(_.foreach { case (rid, n, h) => assert(n == h, s"row $rid") })
+    assert(interp == codegen)
+    val byRow = interp.map { case (rid, n, _) => rid -> n }.toMap
+    assert(byRow(100L) == Some(4L))
+    assert(byRow(102L) == Some(3L)) // all distances NULL → lowest id
+    assert(byRow(103L) == Some(8L)) // a NULL distance sorts first and wins
+    assert(byRow(104L) == Some(6L))
+    assert(byRow(106L).isEmpty)     // a NULL entry is (NULL, NULL)
+    assert(byRow(107L).isEmpty)
+    assert(byRow(108L) == Some(Long.MaxValue))
+    assert(byRow(109L).isEmpty)
+    // int ids widen to bigint
+    val intIds = Seq((1, Seq(2L, 2L)), (0, Seq(2L, 2L))).toDF("id", "vec")
+      .agg(collect_list(struct(col("id"), col("vec"))).as("cands"))
+      .select(graft.operators.Pq.argminL2Fp(typedLit(Seq(1L, 1L)), col("cands")))
+      .as[Long].head()
+    assert(intIds == 0L)
+  }
+
   test("expressions survive both codegen and interpreted paths") {
     // wholestage off forces the interpreted/eval path
     val df = vecs.toDF("id", "a", "b")

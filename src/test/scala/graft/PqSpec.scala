@@ -109,6 +109,65 @@ class PqSpec extends AnyFunSuite with SparkFixture {
     assert(Pq.encode(df, "vec_id", "embedding", cb, M, D).count() == 8L * M)
   }
 
+  /** A corpus of seeded random vectors: codes and shortlists vary, so the
+    * multi-budget comparisons below are not trivially equal.
+    */
+  private def randomCorpus(n: Int) = {
+    val rnd = new scala.util.Random(5)
+    (0 until n).map(i => (i.toLong, Seq.fill(D)(rnd.nextInt(9) - 4f + rnd.nextFloat())))
+      .toDF("vec_id", "embedding")
+  }
+
+  private val Budgets = Seq((2, 4), (4, 3), (8, 2)) // (m, k)
+
+  test("multi-budget training and encode equal per-budget trainCodebooks / encode, row for row") {
+    val df = randomCorpus(40)
+    val sv = Pq.subVectorsFpMulti(fpOf(df), "vec_id", Budgets.map(_._1), D)
+    for (iters <- Seq(1, 2)) {
+      val cb = Pq.trainCodebooksMulti(sv, "vec_id", Budgets.map(_._2), iters)
+      val codes = Pq.encodeSv(sv, cb).collect()
+        .map(r => (r.getAs[Int]("sub"), r.getAs[Long]("vec_id"), r.getAs[Long]("code")))
+      val cbRows = cb.collect().map(r => (r.getAs[Int]("sub"), r.getAs[Long]("cid"),
+        r.getAs[Int]("dim"), r.getAs[Long]("c_fp"), r.getAs[Long]("n")))
+      Budgets.zipWithIndex.foreach { case ((m, k), i) =>
+        val base = i * Pq.CfgStride
+        val single = Pq.localized(Pq.trainCodebooks(df, "vec_id", "embedding", m, D, k, iters))
+        assert(cbRows.filter(r => r._1 / Pq.CfgStride == i)
+          .map(r => r.copy(_1 = r._1 - base)).toSet ==
+          single.collect().map(r => (r.getAs[Int]("sub"), r.getAs[Long]("cid"),
+            r.getAs[Int]("dim"), r.getAs[Long]("c_fp"), r.getAs[Long]("n"))).toSet,
+          s"codebooks m=$m k=$k iters=$iters")
+        val got = codes.filter(_._1 / Pq.CfgStride == i).map { case (s, id, c) => (s - base, id, c) }
+        val want = Pq.encode(df, "vec_id", "embedding", single, m, D).collect()
+          .map(r => (r.getAs[Int]("sub"), r.getAs[Long]("vec_id"), r.getAs[Long]("code")))
+        assert(got.sorted.toSeq == want.sorted.toSeq, s"codes m=$m k=$k iters=$iters")
+        assert(got.length == 40 * m)
+      }
+    }
+  }
+
+  test("multi-budget per-probe ADC top-k equals per-budget adcTopKPerProbe, row for row") {
+    val df = randomCorpus(40)
+    val sv = Pq.subVectorsFpMulti(fpOf(df), "vec_id", Budgets.map(_._1), D)
+    val cb = Pq.trainCodebooksMulti(sv, "vec_id", Budgets.map(_._2), iters = 1)
+    val isProbe = col("vec_id") % 7 === 0
+    val multi = Pq.adcTopKPerProbeMulti(Pq.encodeSv(sv, cb), "vec_id", cb,
+      sv.filter(isProbe).withColumnRenamed("vec_id", "probe_id"), 6).collect()
+      .map(r => (r.getAs[Int]("cfg"), r.getAs[Long]("probe_id"), r.getAs[Long]("vec_id"),
+        r.getAs[Long]("adc_d")))
+    Budgets.zipWithIndex.foreach { case ((m, k), i) =>
+      val single = Pq.localized(Pq.trainCodebooks(df, "vec_id", "embedding", m, D, k, 1))
+      val probesSv = Pq.subVectorsFp(
+        df.filter(isProbe).select(col("vec_id").as("probe_id"), col("embedding")),
+        "probe_id", "embedding", m, D)
+      val want = Pq.adcTopKPerProbe(Pq.encode(df, "vec_id", "embedding", single, m, D),
+        "vec_id", single, probesSv, 6).collect()
+        .map(r => (i, r.getAs[Long]("probe_id"), r.getAs[Long]("vec_id"), r.getAs[Long]("adc_d")))
+      assert(multi.filter(_._1 == i).sorted.toSeq == want.sorted.toSeq, s"m=$m k=$k")
+      assert(want.length == 6 * 6) // probes 0, 7, …, 35
+    }
+  }
+
   private def fpOf(df: org.apache.spark.sql.DataFrame) =
     df.select(col("vec_id"),
       transform(col("embedding"), x => floor(x.cast("double") * 1e7).cast("long")).as("v"))
