@@ -1,4 +1,5 @@
 package graft
+import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.sql.SparkSession
 
 /** Headline benchmark: one JSON line with per-query steady-state seconds.
@@ -18,9 +19,13 @@ import org.apache.spark.sql.SparkSession
   * other work between a query's reps, so a single contention window can
   * contaminate at most one pass; the per-query MIN is the steady-state
   * floor of the plan — contention only ever adds, never subtracts. Pass 1
-  * additionally pays per-query codegen + classloading (a fixed JVM cost
+  * additionally pays classloading and per-query codegen (a fixed JVM cost
   * that vanishes over a long-lived cluster session), which min across
-  * passes also absorbs.
+  * passes also absorbs. That holds for codegen only because
+  * [[SessionTuning]] sizes Spark's compiled-class cache to the sweep's
+  * working set: with Spark's 100-entry default every pass recompiled
+  * everything. Each `[bench-diag] pass` stderr line reports the pass's
+  * compile count, so a sweep shows whether passes 2+ still recompile.
   *
   * Sweep hygiene: after each query execution the harness reaps any
   * persisted RDDs the query leaked (logged to stderr — a correctness
@@ -278,6 +283,7 @@ object Bench {
     while (pass <= passes && !stop) {
       val p0 = System.nanoTime()
       val cpu0 = cpuTicks()
+      val compiled0 = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
       val it = queries.iterator
       while (it.hasNext && !passAborted) {
         if (remainingSec <= 0 && times.nonEmpty) {
@@ -317,7 +323,8 @@ object Bench {
       latestLine.set(buildLine())
       System.err.println(
         f"[bench-diag] pass $pass/$passes ${if (passAborted) "ABORTED at deadline" else "done"} in $passSec%.1f s " +
-          s"(canary loop ${hcLoop.last} ms, cpu ${hcCpu.last}, io ${hcIo.last} MB/s)")
+          s"(canary loop ${hcLoop.last} ms, cpu ${hcCpu.last}, io ${hcIo.last} MB/s, " +
+          s"compiles ${CodegenMetrics.METRIC_COMPILATION_TIME.getCount - compiled0})")
       // (a): stop early when the slowest observed pass no longer fits the
       // remaining budget — contention only ever slows passes down, so the
       // max is the honest estimate of the next one under current weather.

@@ -45,4 +45,22 @@ object SessionTuning {
     // clusters with bigger/smaller per-task memory.
     .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold",
       sys.env.getOrElse("SPARK_GRAFT_OBJ_AGG_FALLBACK", "65536"))
+    .config("spark.sql.codegen.cache.maxEntries", CodegenCacheEntries.toString)
+
+  /** Capacity of Spark's JVM-wide cache of Janino-compiled classes.
+    *
+    * Spark's default keeps 100 classes, and a long-lived session that
+    * repeats a cycle larger than that misses the LRU cache on EVERY
+    * access: each refresh recompiles every class it needs. Classes
+    * compiled per perfbench cycle (`CodegenMetrics`, seed 7, 4 cores),
+    * default → this cap: a `grid_refresh` page 161 → 9 by the third
+    * page, an `llm_data` cycle 248 → 2 by the fourth. One `graft.Verify`
+    * pass at sf0.01 compiles 4354 classes under an uncapped cache, so the
+    * cap is the next power of two above it: the whole 287-query sweep
+    * stays resident (`graft.Bench` at sf0.01: pass 1 compiles 4357
+    * classes, pass 2 only 322).
+    * Static conf: read once per JVM when `CodeGenerator` initializes, so
+    * session build is the only place it can be set.
+    */
+  private val CodegenCacheEntries = 8192
 }

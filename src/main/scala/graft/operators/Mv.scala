@@ -428,14 +428,16 @@ object Mv {
         val merged = mergeState(existing, delta, keys :+ "__b",
           adds.map(_._1), mins.map(_._1), maxs.map(_._1))
         val dirty = dirtyKeys(existing, feed, keys, mins, maxs)
-        // dirty groups exist in `existing` by construction, so their
-        // bucket ids come from there — rescan rows re-enter the fold's
-        // touched buckets, never anyone else's
-        val bmap = existing.select((keys :+ "__b").map(col): _*).distinct()
+        // `__b` is a pure function of the bucket keys, so rescan rows take
+        // it from the table's own bucket hash, not from a read of
+        // `existing`. Dirty groups exist in `existing` by construction, so
+        // they re-enter the fold's touched buckets, never anyone else's
+        val bk = if (bucketKeys.isEmpty) keys else bucketKeys
         val cols = merged.columns.map(col).toSeq
         merged.join(dirty, keys, "left_anti")
           .filter(col(support) > 0L)
-          .unionByName(rescan(dirty, target).join(bmap, keys)
+          .unionByName(rescan(dirty, target)
+            .withColumn("__b", graft.sources.Tx.bucketOf(bk, nBuckets))
             .select(cols: _*))
       })
   }

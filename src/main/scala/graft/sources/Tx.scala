@@ -1679,7 +1679,7 @@ object Tx {
     * recorded column types: the same logical key as int vs long hashes
     * to different buckets.
     */
-  private def bucketOf(keys: Seq[String], nb: Int) =
+  private[graft] def bucketOf(keys: Seq[String], nb: Int) =
     pmod(xxhash64(keys.map(col): _*), lit(nb)).cast("int")
 
   /** Driver-side mirror of [[bucketOf]] for ONE bucket-key tuple: the

@@ -120,6 +120,20 @@ class TxChangesScan(
 
   override def createReaderFactory(): PartitionReaderFactory =
     TxChangesScan.readerFactory
+
+  /** Two reads of one feed span are the same scan, so AQE can reuse the
+    * exchanges above them (`BatchScanExec` compares its batches). Equal
+    * over the RESOLVED content, not the version numbers: commit dirs are
+    * UUID-named, so a re-created table never matches a stale span.
+    */
+  private def content =
+    (path, a.dirs, a.tombs, b.dirs, b.tombs, b.meta.get(Tx.SchemaKey),
+      emitPre, feedSchema, maxDiffBytes)
+  override def equals(other: Any): Boolean = other match {
+    case o: TxChangesScan => o.content == content
+    case _ => false
+  }
+  override def hashCode(): Int = content.##
 }
 
 object TxChangesScan {

@@ -1,5 +1,6 @@
 package graft.tools
 
+import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.sql.execution.{QueryExecution, SparkPlan}
 import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
 import org.apache.spark.sql.execution.datasources.v2.DataSourceV2ScanExecBase
@@ -10,10 +11,12 @@ import org.apache.spark.sql.util.QueryExecutionListener
   * collect, as the benchmark's dial sweep does), prints its final adaptive
   * plan (explain formatted) and one shape line
   *
-  *   [shape] <query> scans=S exchanges=E reused=R
+  *   [shape] <query> scans=S exchanges=E reused=R compiles=C
   *
   * summed over every execution the query made — eager collects while it
-  * was built and the final run — on the final adaptive plans. The session
+  * was built and the final run — on the final adaptive plans. `compiles`
+  * counts the classes Janino compiled meanwhile: codegen-cache misses,
+  * so 0 when an earlier query already compiled every shape. The session
   * is [[graft.Bench.session]], so these are the plans the sweep runs.
   * Usage: tools/run.sh graft.tools.Explain [sfDir] [queryName...]
   * (cores: SPARK_GRAFT_CPUS, default 4).
@@ -59,13 +62,15 @@ object Explain {
       if (names.isEmpty || names(name)) {
         println(s"\n========== $name ==========")
         shape.synchronized(java.util.Arrays.fill(shape, 0))
+        val compiled0 = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
         try {
           val df = fn(spark, sfDir)
           df.collect()
+          val compiles = CodegenMetrics.METRIC_COMPILATION_TIME.getCount - compiled0
           df.explain("formatted") // the final adaptive plan of that run
           org.apache.spark.sql.graftshim.DatasetShim.drainListeners(spark)
-          shape.synchronized(
-            println(s"[shape] $name scans=${shape(0)} exchanges=${shape(1)} reused=${shape(2)}"))
+          shape.synchronized(println(s"[shape] $name scans=${shape(0)} " +
+            s"exchanges=${shape(1)} reused=${shape(2)} compiles=$compiles"))
         } catch { case e: Throwable => println(s"ERROR: ${e.getMessage}") }
         finally graft.sources.Scratch.reap()
       }

@@ -3180,4 +3180,42 @@ class TxSpec extends AnyFunSuite with SparkFixture {
     assert(!s3.dirs.contains(victim) && s3.tombs.isEmpty)
     assert(rows(Tx.read(spark, path)) == live)
   }
+
+  test("change-feed scan: one span read twice reuses its exchange; spans differ") {
+    import graft.sources.tx.{TxChanges, TxChangesScan}
+    val path = tmp()
+    def history(): Unit = {
+      Tx.commitMerge(spark, path,
+        Seq((1L, 10L), (2L, 20L), (3L, 30L)).toDF("id", "v"), Seq("id"),
+        nBuckets = 4)
+      Tx.commitMerge(spark, path, Seq((2L, 21L), (4L, 40L)).toDF("id", "v"),
+        Seq("id"), nBuckets = 4)
+      Tx.commitDelete(spark, path, Seq(1L).toDF("id"), Seq("id"),
+        nBuckets = 4)
+    }
+    history()
+    val counts = spark.read.format("graft-tx").option("readChangeFeed", true)
+      .option("fromVersion", 1L).option("toVersion", 3L)
+      .option("emitPre", true).load(path)
+      .groupBy("_change").count()
+    val both = counts.unionByName(counts)
+    both.collect()
+    val plan = both.queryExecution.executedPlan.toString
+    assert(plan.contains("ReusedExchange"),
+      s"the second read of the span must reuse the first's exchange:\n$plan")
+    val schema = TxChanges.feedSchema(Tx.read(spark, path).schema)
+    def scan(from: Long, to: Long, emitPre: Boolean = true) =
+      new TxChangesScan(path, from, to, emitPre, schema, 8L << 30)
+    val s13 = scan(1L, 3L)
+    assert(s13 == scan(1L, 3L) && s13.hashCode == scan(1L, 3L).hashCode)
+    assert(s13 != scan(1L, 2L) && s13 != scan(2L, 3L) &&
+      s13 != scan(1L, 3L, emitPre = false))
+    // the same history re-created lands in fresh UUID-named dirs
+    val files = java.nio.file.Files.walk(java.nio.file.Paths.get(path))
+    try files.sorted(java.util.Comparator.reverseOrder[java.nio.file.Path]())
+      .forEach(f => java.nio.file.Files.delete(f))
+    finally files.close()
+    history()
+    assert(s13 != scan(1L, 3L), "a re-created table must not match a stale span")
+  }
 }
